@@ -1,12 +1,14 @@
 """Streaming queries (SURVEY §2i) — real Structured Streaming runs,
 bounded with availableNow, oracle-checked against batch SQL.
 
-Each query stages the ``events`` table as an ordered multi-file stream
-(time-partitioned so the watermark never drops an in-order row), runs
-the streaming plan through a checkpointed parquet sink, and returns the
-sink. Because every pipeline is deterministic, batch SQL over the same
-rows is an exact oracle — the strongest possible check of streaming
-semantics (window assignment, watermark finalization, state
+Each query stages its input (mostly the ``events`` table) as an ordered
+multi-file stream with ``harness.staged_stream`` (time-partitioned so
+the watermark never drops an in-order row), builds the streaming plan
+on it, and runs it with ``harness.run_bounded`` — into a checkpointed
+parquet sink it returns, or into a ``foreachBatch`` table sink it then
+reads back. Because every pipeline is deterministic, batch SQL over the
+same rows is an exact oracle — the strongest possible check of
+streaming semantics (window assignment, watermark finalization, state
 transitions).
 
 Flush rows: append-mode windowed aggregations only emit a window after
@@ -37,10 +39,10 @@ from ecommerce_dataengineering_project_spark.streaming.event_windows import (
 from ecommerce_dataengineering_project_spark.streaming.harness import (
     TMP_ROOT,
     _capture_plan as _harness_capture,
+    _stream_dirs,
     adaptive_state_partitions,
-    run_bounded_stream,
-    stage_source_tagged,
-    staged_source,
+    run_bounded,
+    staged_stream,
 )
 from ecommerce_dataengineering_project_spark.streaming.stateful import (
     INITIAL_LEVEL,
@@ -134,16 +136,13 @@ def _sf_key(sf_dir: str) -> str:
 
 
 def _events_source(spark: SparkSession, sf_dir: str, n_flush: int, n_data: int = 3):
-    def stage(source_dir: str):
+    def build():
         tagged = _tagged_events(spark, sf_dir, n_data)
-        stage_source_tagged(
-            tagged, n_data, source_dir, _flush_rows(n_flush) if n_flush else None
-        )
-        return EVENT_SCHEMA
+        return tagged, n_data, EVENT_SCHEMA, _flush_rows(n_flush) if n_flush else None
 
     suffix = "" if n_data == 3 else f"_d{n_data}"
-    return staged_source(
-        spark, f"events_{_sf_key(sf_dir)}_f{n_flush}{suffix}", stage
+    return staged_stream(
+        spark, f"events_{_sf_key(sf_dir)}_f{n_flush}{suffix}", build
     )
 
 
@@ -158,22 +157,17 @@ def _events_dup_source(spark: SparkSession, sf_dir: str, n_flush: int = 0):
     extra micro-batch paid ~0.5-1 s of addBatch + offset/commit-log
     fsync for no additional semantics."""
 
-    def stage(source_dir: str):
+    def build():
         ev = _tagged_events(spark, sf_dir, n_data=2)
         dup = _tagged_events(spark, sf_dir, n_data=1).withColumn(
             "__batch", F.lit(2)
         )
-        stage_source_tagged(
-            ev.unionByName(dup),
-            3,
-            source_dir,
-            _flush_rows(n_flush) if n_flush else None,
-        )
-        return EVENT_SCHEMA
+        flush = _flush_rows(n_flush) if n_flush else None
+        return ev.unionByName(dup), 3, EVENT_SCHEMA, flush
 
     suffix = "_flush" if n_flush else ""
-    return staged_source(
-        spark, f"events_dup3{suffix}_{_sf_key(sf_dir)}", stage
+    return staged_stream(
+        spark, f"events_dup3{suffix}_{_sf_key(sf_dir)}", build
     )
 
 
@@ -187,7 +181,7 @@ def q_stream_bronze_silver(spark: SparkSession, sf_dir: str) -> DataFrame:
     opts = {"timestampFormat": _TS_FMT, "timestampNTZFormat": _TS_FMT}
     aliases = {"value": ["value", "amount"]}  # drift-alias demo (cf. add_supplement(s))
 
-    def stage(source_dir: str):
+    def build():
         # stateless parse: one consolidated micro-batch (r16 — each
         # extra batch paid a full trigger of addBatch + commit fsync
         # for a pipeline with no state to carry between batches)
@@ -196,53 +190,44 @@ def q_stream_bronze_silver(spark: SparkSession, sf_dir: str) -> DataFrame:
         kafka = tagged.select(
             F.to_json(F.struct(*data_cols), opts).alias("value"), "__batch"
         )
-        stage_source_tagged(kafka, 1, source_dir)
-        return kafka.drop("__batch").schema
+        return kafka, 1, kafka.drop("__batch").schema, None
 
-    src = staged_source(spark, f"events_kafka_d1_{_sf_key(sf_dir)}", stage)
-
-    def transform(stream: DataFrame) -> DataFrame:
-        return parse_with_drift(stream, EVENT_SCHEMA, aliases, options=opts)
-
-    return run_bounded_stream(spark, "bronze_silver", None, transform, source=src)
+    src = staged_stream(spark, f"events_kafka_d1_{_sf_key(sf_dir)}", build)
+    return run_bounded(
+        spark, "bronze_silver", parse_with_drift(src, EVENT_SCHEMA, aliases, options=opts)
+    )
 
 
 def q_stream_tumbling_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T6 tumbling: daily revenue/count per event_type, watermarked."""
     src = _events_source(spark, sf_dir, n_flush=2, n_data=1)
-
-    def transform(stream: DataFrame) -> DataFrame:
-        return tumbling_agg(stream, "ts", "1 day", ["event_type"], "value")
-
     # Flush rows are removed AFTER the stream: a filter on the group key
     # inside the streaming plan would be pushed down into the scan by
     # Catalyst, and the watermark would never see the flush timestamps.
-    return run_bounded_stream(
-        spark, "tumbling_revenue", None, transform, source=src
+    return run_bounded(
+        spark,
+        "tumbling_revenue",
+        tumbling_agg(src, "ts", "1 day", ["event_type"], "value"),
     ).where(F.col("event_type") != "__flush")
 
 
 def q_stream_sliding_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T6 sliding: 24 h window every 12 h per event_type."""
     src = _events_source(spark, sf_dir, n_flush=2, n_data=1)
-
-    def transform(stream: DataFrame) -> DataFrame:
-        return sliding_agg(stream, "ts", "1 day", "12 hours", ["event_type"], "value")
-
-    return run_bounded_stream(
-        spark, "sliding_activity", None, transform, source=src
+    return run_bounded(
+        spark,
+        "sliding_activity",
+        sliding_agg(src, "ts", "1 day", "12 hours", ["event_type"], "value"),
     ).where(F.col("event_type") != "__flush")
 
 
 def q_stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T6 session: per-user sessions closed by 6 h of silence."""
     src = _events_source(spark, sf_dir, n_flush=2, n_data=1)
-
-    def transform(stream: DataFrame) -> DataFrame:
-        return session_agg(stream, "ts", "6 hours", ["user_id"], "value")
-
-    return run_bounded_stream(
-        spark, "session_windows", None, transform, source=src
+    return run_bounded(
+        spark,
+        "session_windows",
+        session_agg(src, "ts", "6 hours", ["user_id"], "value"),
     ).where(F.col("user_id") >= 0)
 
 
@@ -263,7 +248,7 @@ def q_stream_inventory_restock(spark: SparkSession, sf_dir: str) -> DataFrame:
     with per-row work measured in microseconds), so it amortizes as
     rows per batch grow — the state machinery, not the data, is the
     cost at test scale."""
-    def stage(source_dir: str):
+    def build():
         # TWO time-ordered batches (r16, was 3): cross-batch GroupState
         # carry-over is still exercised across the one boundary, and
         # the fold is order-deterministic (per-batch (ts, event_id)
@@ -277,22 +262,25 @@ def q_stream_inventory_restock(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("event_id") % 3 + 1).cast("int").alias("qty"),
             "__batch",
         )
-        stage_source_tagged(qty, 2, source_dir)
-        return qty.drop("__batch").schema
+        return qty, 2, qty.drop("__batch").schema, None
 
-    src = staged_source(spark, f"events_qty_d2_{_sf_key(sf_dir)}", stage)
+    src = staged_stream(spark, f"events_qty_d2_{_sf_key(sf_dir)}", build)
     # Unlike the commit-bound aggregations, the restock scan does real
     # per-group Python work — give it parallelism, not fewer commits
     # (measured sf0.1: 16 partitions ~30% faster than 4 on local[32]),
     # derived from the session's parallelism so a smaller session
     # doesn't pay extra commit waves (adaptive_state_partitions note).
-    return run_bounded_stream(
+    return run_bounded(
         spark,
         "inventory_restock",
-        None,
-        inventory_restock_stream,
+        inventory_restock_stream(src),
         state_partitions=adaptive_state_partitions(spark),
-        source=src,
+    )
+
+
+def _dedup_events(stream: DataFrame) -> DataFrame:
+    return stream.dropDuplicates(["event_id"]).select(
+        "event_id", "ts", "user_id", "event_type", "value"
     )
 
 
@@ -304,13 +292,7 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay checks exact-once emission across batch boundaries."""
 
     src = _events_dup_source(spark, sf_dir)
-
-    def transform(stream: DataFrame) -> DataFrame:
-        return stream.dropDuplicates(["event_id"]).select(
-            "event_id", "ts", "user_id", "event_type", "value"
-        )
-
-    return run_bounded_stream(spark, "stream_dedup", None, transform, source=src)
+    return run_bounded(spark, "stream_dedup", _dedup_events(src))
 
 
 def q_stream_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -324,17 +306,12 @@ def q_stream_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
     horizon SLA."""
 
     src = _events_dup_source(spark, sf_dir)
-
-    def transform(stream: DataFrame) -> DataFrame:
-        return (
-            stream.withWatermark("ts", "40 days")
-            .dropDuplicatesWithinWatermark(["event_id"])
-            .select("event_id", "ts", "user_id", "event_type", "value")
-        )
-
-    return run_bounded_stream(
-        spark, "stream_dedup_watermarked", None, transform, source=src
+    out = (
+        src.withWatermark("ts", "40 days")
+        .dropDuplicatesWithinWatermark(["event_id"])
+        .select("event_id", "ts", "user_id", "event_type", "value")
     )
+    return run_bounded(spark, "stream_dedup_watermarked", out)
 
 
 def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -343,35 +320,35 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark can discard buffered rows once the interval provably passed
     — the state-bounding condition for stream-stream joins."""
     src = _events_source(spark, sf_dir, n_flush=2, n_data=1)
-
-    def transform(stream: DataFrame) -> DataFrame:
-        clicks = (
-            stream.where(F.col("event_type") == "click")
-            .select(
-                F.col("user_id").alias("c_user"),
-                F.col("event_id").alias("click_id"),
-                F.col("ts").alias("click_ts"),
-            )
-            .withWatermark("click_ts", "1 hour")
+    clicks = (
+        src.where(F.col("event_type") == "click")
+        .select(
+            F.col("user_id").alias("c_user"),
+            F.col("event_id").alias("click_id"),
+            F.col("ts").alias("click_ts"),
         )
-        purchases = (
-            stream.where(F.col("event_type") == "purchase")
-            .select(
-                F.col("user_id").alias("p_user"),
-                F.col("event_id").alias("purchase_id"),
-                F.col("ts").alias("purchase_ts"),
-            )
-            .withWatermark("purchase_ts", "1 hour")
+        .withWatermark("click_ts", "1 hour")
+    )
+    purchases = (
+        src.where(F.col("event_type") == "purchase")
+        .select(
+            F.col("user_id").alias("p_user"),
+            F.col("event_id").alias("purchase_id"),
+            F.col("ts").alias("purchase_ts"),
         )
-        joined = purchases.join(
-            clicks,
-            (F.col("p_user") == F.col("c_user"))
-            & (F.col("click_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 1 HOUR"))
-            & (F.col("click_ts") < F.col("purchase_ts")),
-        )
-        return joined.select("purchase_id", "click_id", F.col("p_user").alias("user_id"))
-
-    return run_bounded_stream(spark, "stream_stream_join", None, transform, source=src)
+        .withWatermark("purchase_ts", "1 hour")
+    )
+    joined = purchases.join(
+        clicks,
+        (F.col("p_user") == F.col("c_user"))
+        & (F.col("click_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 1 HOUR"))
+        & (F.col("click_ts") < F.col("purchase_ts")),
+    )
+    return run_bounded(
+        spark,
+        "stream_stream_join",
+        joined.select("purchase_id", "click_id", F.col("p_user").alias("user_id")),
+    )
 
 
 def q_stream_upsert_gold(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -391,10 +368,6 @@ def q_stream_upsert_gold(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from ecommerce_dataengineering_project_spark.sources.maintenance import (
         merge_upsert_path,
-    )
-    from ecommerce_dataengineering_project_spark.streaming.harness import (
-        TMP_ROOT,
-        run_bounded_foreach,
     )
 
     src = _events_source(spark, sf_dir, n_flush=0)
@@ -416,7 +389,7 @@ def q_stream_upsert_gold(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         merge_upsert_path(spark, gold_dir, latest, ["user_id"])
 
-    run_bounded_foreach(spark, name, None, lambda s: s, upsert, source=src)
+    run_bounded(spark, name, src, sink=upsert)
     return spark.read.parquet(gold_dir)
 
 
@@ -437,10 +410,6 @@ def q_stream_scd2_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from ecommerce_dataengineering_project_spark.operators.scd import scd2_apply
-    from ecommerce_dataengineering_project_spark.streaming.harness import (
-        TMP_ROOT,
-        run_bounded_foreach,
-    )
     from pyspark.sql import Window
     from pyspark.sql.types import (
         DateType,
@@ -452,7 +421,7 @@ def q_stream_scd2_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim_dir = os.path.join(TMP_ROOT, "streams", name, "dim")
     shutil.rmtree(dim_dir, ignore_errors=True)
 
-    def stage(source_dir: str):
+    def build():
         orders = load_table(spark, sf_dir, "orders")
         w = Window.partitionBy("o_custkey", F.to_date("o_orderdate")).orderBy(
             F.col("o_orderkey").asc()
@@ -473,16 +442,16 @@ def q_stream_scd2_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
             .when(F.col("effective_from") < y99, 1)
             .otherwise(2)
         )
-        stage_source_tagged(upd.withColumn("__batch", tag.cast("int")), 3, source_dir)
-        return ST(
+        schema = ST(
             [
                 SF("c_custkey", LongType()),
                 SF("segment", StringType()),
                 SF("effective_from", DateType()),
             ]
         )
+        return upd.withColumn("__batch", tag.cast("int")), 3, schema, None
 
-    src = staged_source(spark, f"scd2_upd_{_sf_key(sf_dir)}", stage)
+    src = staged_stream(spark, f"scd2_upd_{_sf_key(sf_dir)}", build)
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         if os.path.isdir(dim_dir):
@@ -512,7 +481,7 @@ def q_stream_scd2_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.rename(stage, dim_dir)
         shutil.rmtree(old, ignore_errors=True)
 
-    run_bounded_foreach(spark, name, None, lambda s: s, apply_batch, source=src)
+    run_bounded(spark, name, src, sink=apply_batch)
     return spark.read.parquet(dim_dir)
 
 
@@ -539,12 +508,10 @@ def q_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    def transform(stream: DataFrame) -> DataFrame:
-        return stream.join(F.broadcast(dim), on="user_id", how="left").select(
-            "event_id", "user_id", "event_type", "value", "mktsegment", "nation_name"
-        )
-
-    return run_bounded_stream(spark, "static_enrich", None, transform, source=src)
+    out = src.join(F.broadcast(dim), on="user_id", how="left").select(
+        "event_id", "user_id", "event_type", "value", "mktsegment", "nation_name"
+    )
+    return run_bounded(spark, "static_enrich", out)
 
 
 def q_stream_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -566,7 +533,7 @@ def q_stream_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     opts = {"timestampFormat": _TS_FMT, "timestampNTZFormat": _TS_FMT}
 
-    def stage(source_dir: str):
+    def build():
         # stateless corrupt-capture parse: one consolidated batch (r16)
         tagged = _tagged_events(spark, sf_dir, n_data=1)
         data_cols = [c for c in tagged.columns if c not in ("__batch", "event_id")]
@@ -580,18 +547,15 @@ def q_stream_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("value"),
             "__batch",
         )
-        stage_source_tagged(kafka, 1, source_dir)
-        return kafka.drop("__batch").schema
+        return kafka, 1, kafka.drop("__batch").schema, None
 
-    src = staged_source(spark, f"events_quarantine_d1_{_sf_key(sf_dir)}", stage)
+    src = staged_stream(spark, f"events_quarantine_d1_{_sf_key(sf_dir)}", build)
     parse_schema = StructType(
         [f for f in EVENT_SCHEMA.fields if f.name != "event_id"]
     )
-
-    def transform(stream: DataFrame) -> DataFrame:
-        return parse_quarantine(stream, parse_schema, options=opts)
-
-    return run_bounded_stream(spark, "quarantine", None, transform, source=src)
+    return run_bounded(
+        spark, "quarantine", parse_quarantine(src, parse_schema, options=opts)
+    )
 
 
 DRIFT_BUCKETS = 8
@@ -706,38 +670,35 @@ def q_stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     src = _events_source(spark, sf_dir, n_flush=2, n_data=1)
     q = drift_baseline(spark, sf_dir)
-
-    def transform(stream: DataFrame) -> DataFrame:
-        b = _drift_bucket("value")
-        agg = (
-            stream.withWatermark("ts", "1 hour")
-            .groupBy(F.window(F.col("ts"), "1 day"), "event_type")
-            .agg(
-                *[
-                    F.count(F.when(b == i, 1)).alias(f"c{i}")
-                    for i in range(DRIFT_BUCKETS)
-                ],
-                F.count(F.lit(1)).alias("n_rows"),
-            )
+    b = _drift_bucket("value")
+    agg = (
+        src.withWatermark("ts", "1 hour")
+        .groupBy(F.window(F.col("ts"), "1 day"), "event_type")
+        .agg(
+            *[
+                F.count(F.when(b == i, 1)).alias(f"c{i}")
+                for i in range(DRIFT_BUCKETS)
+            ],
+            F.count(F.lit(1)).alias("n_rows"),
         )
-        kl = None
-        for i in range(DRIFT_BUCKETS):
-            p = (F.col(f"c{i}") + F.lit(1)).cast("double") / (
-                F.col("n_rows") + F.lit(DRIFT_BUCKETS)
-            )
-            term = p * F.log(p / F.lit(q[i]))
-            kl = term if kl is None else kl + term
-        return agg.select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            "event_type",
-            "n_rows",
-            round_half_up(kl, 6).alias("kl"),
+    )
+    kl = None
+    for i in range(DRIFT_BUCKETS):
+        p = (F.col(f"c{i}") + F.lit(1)).cast("double") / (
+            F.col("n_rows") + F.lit(DRIFT_BUCKETS)
         )
-
-    return run_bounded_stream(
-        spark, "drift_monitor", None, transform, source=src
-    ).where(F.col("event_type") != "__flush")
+        term = p * F.log(p / F.lit(q[i]))
+        kl = term if kl is None else kl + term
+    out = agg.select(
+        F.col("window.start").alias("window_start"),
+        F.col("window.end").alias("window_end"),
+        "event_type",
+        "n_rows",
+        round_half_up(kl, 6).alias("kl"),
+    )
+    return run_bounded(spark, "drift_monitor", out).where(
+        F.col("event_type") != "__flush"
+    )
 
 
 QUERIES = {
@@ -972,10 +933,6 @@ def q_stream_txlog_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from ecommerce_dataengineering_project_spark.sources.txlog import recreate
-    from ecommerce_dataengineering_project_spark.streaming.harness import (
-        TMP_ROOT,
-        run_bounded_foreach,
-    )
 
     src = _events_source(spark, sf_dir, n_flush=0)
     name = f"txlog_append_{_sf_key(sf_dir)}"
@@ -990,7 +947,7 @@ def q_stream_txlog_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         # SetTransaction watermark (append_txn) detects the replay
         table.append_txn(batch, name, batch_id)
 
-    run_bounded_foreach(spark, name, None, lambda s: s, commit, source=src)
+    run_bounded(spark, name, src, sink=commit)
     return table.read(spark)
 
 
@@ -1008,6 +965,10 @@ GEN_STREAM_ROWS = 3_000
 # streaming-query start (~1.5 s of JVM+Python-source spin-up, the
 # dominant term in this query's wall-clock).
 GEN_STREAM_BATCH = 1_500
+# ceil(rows/batch) productive drains, with headroom for no-op passes
+# where availableNow snapshotted before the prefetch landed. Running out
+# of drains is an error, never a silently partial sink.
+GEN_STREAM_DRAINS = 2 * (GEN_STREAM_ROWS // GEN_STREAM_BATCH) + 4
 
 
 def q_stream_generator_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1040,15 +1001,13 @@ def q_stream_generator_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxRows", GEN_STREAM_ROWS)
         .load()
     )
-    # ceil(rows/batch) productive drains, with headroom for no-op
-    # passes where availableNow snapshotted before the prefetch landed.
     # Drain progress is read from recentProgress (driver-side, emitted
     # per COMMITTED batch) instead of a Spark count() job over the sink
     # after every drain — two scheduled jobs for a number the query
     # already reported (r16, guide §5 driver work; a drain that races
     # the prefetcher just reports 0 rows and the loop keeps draining).
     rows_committed = 0
-    for _ in range(2 * (GEN_STREAM_ROWS // GEN_STREAM_BATCH) + 4):
+    for _ in range(GEN_STREAM_DRAINS):
         q = (
             stream.writeStream.format("parquet")
             .option("path", sink)
@@ -1056,12 +1015,20 @@ def q_stream_generator_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        if not q.awaitTermination(120):
+            q.stop()
+            raise TimeoutError(
+                f"stream_generator_ingest: drain still running after 120 s "
+                f"({rows_committed} of {GEN_STREAM_ROWS} rows committed before it)"
+            )
         _harness_capture("stream_generator_ingest", q)
         rows_committed += sum(p.numInputRows for p in q.recentProgress)
         if rows_committed >= GEN_STREAM_ROWS:
-            break
-    return spark.read.parquet(sink)
+            return spark.read.parquet(sink)
+    raise RuntimeError(
+        f"stream_generator_ingest: {GEN_STREAM_DRAINS} drains committed "
+        f"{rows_committed} of {GEN_STREAM_ROWS} rows; the sink is partial"
+    )
 
 
 QUERIES["stream_generator_ingest"] = q_stream_generator_ingest
@@ -1181,15 +1148,13 @@ def q_stream_txlog_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     lands every committed row in a parquet sink, hash-checked against
     the plain events fixture."""
     import os
-    import shutil
 
     from ecommerce_dataengineering_project_spark.sources import pyds_txlog
     from ecommerce_dataengineering_project_spark.sources.readers import load_table
     from ecommerce_dataengineering_project_spark.sources.txlog import TxTable, recreate
 
-    base = os.path.join(TMP_ROOT, "streams", f"txsrc_{_sf_key(sf_dir)}")
-    root = os.path.join(base, "table")
-    sink, ckpt = os.path.join(base, "sink"), os.path.join(base, "ckpt")
+    name = f"txsrc_{_sf_key(sf_dir)}"
+    root = os.path.join(TMP_ROOT, "streams", name, "table")
     table = TxTable(root)
     ev = load_table(spark, sf_dir, "events")
     if len(table.versions()) != 3:
@@ -1197,19 +1162,8 @@ def q_stream_txlog_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         for i in range(3):
             table.append(ev.where(F.col("event_id") % 3 == i))
     pyds_txlog.register(spark)
-    shutil.rmtree(sink, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
     stream = spark.readStream.format("txlog_stream").option("path", root).load()
-    q = (
-        stream.writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    _harness_capture("stream_txlog_source", q)
-    return spark.read.schema(stream.schema).parquet(sink)
+    return run_bounded(spark, name, stream)
 
 
 QUERIES["stream_txlog_source"] = q_stream_txlog_source
@@ -1235,24 +1189,12 @@ def q_stream_dedup_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
     this query's run and restored after."""
 
     src = _events_dup_source(spark, sf_dir)
-
-    def transform(stream: DataFrame) -> DataFrame:
-        return stream.dropDuplicates(["event_id"]).select(
-            "event_id", "ts", "user_id", "event_type", "value"
-        )
-
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, ROCKSDB_PROVIDER)
-    try:
-        return run_bounded_stream(
-            spark, "stream_dedup_rocksdb", None, transform, source=src
-        )
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+    return run_bounded(
+        spark,
+        "stream_dedup_rocksdb",
+        _dedup_events(src),
+        confs={"spark.sql.streaming.stateStore.providerClass": ROCKSDB_PROVIDER},
+    )
 
 
 QUERIES["stream_dedup_rocksdb"] = q_stream_dedup_rocksdb
@@ -1273,14 +1215,10 @@ def q_statestore_inspect(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoint is the source."""
 
     src = _events_dup_source(spark, sf_dir)
-
-    def transform(stream: DataFrame) -> DataFrame:
-        return stream.dropDuplicates(["event_id"]).select("event_id")
-
-    run_bounded_stream(spark, "statestore_inspect", None, transform, source=src)
-    from ecommerce_dataengineering_project_spark.streaming.harness import _stream_dirs
-
-    ckpt = _stream_dirs("statestore_inspect")[2]
+    run_bounded(
+        spark, "statestore_inspect", src.dropDuplicates(["event_id"]).select("event_id")
+    )
+    ckpt = _stream_dirs("statestore_inspect")[1]
     state = spark.read.format("statestore").load(ckpt)
     return state.select(F.col("key.event_id").alias("event_id"))
 
@@ -1309,10 +1247,6 @@ def q_stream_fanout_two_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from ecommerce_dataengineering_project_spark.sources.txlog import recreate
-    from ecommerce_dataengineering_project_spark.streaming.harness import (
-        TMP_ROOT,
-        run_bounded_foreach,
-    )
 
     src = _events_source(spark, sf_dir, n_flush=0)
     name = f"fanout_{_sf_key(sf_dir)}"
@@ -1332,7 +1266,7 @@ def q_stream_fanout_two_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
         raw.append_txn(detail, f"{name}_raw", batch_id)
         agg.append_txn(partials, f"{name}_agg", batch_id)
 
-    run_bounded_foreach(spark, name, None, lambda s: s, commit, source=src)
+    run_bounded(spark, name, src, sink=commit)
     from_raw = raw.read(spark).groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_raw")
     )
@@ -1355,6 +1289,39 @@ ORACLES["stream_fanout_two_tables"] = """
 """
 
 
+def _interval_join_with_flush(stream: DataFrame, how: str) -> DataFrame:
+    """Purchases joined (``how``) to the same user's clicks in the
+    preceding hour under one shared 1-hour watermark — the outer-join
+    arms below.
+
+    The flush rows must ride a JOIN BRANCH: Catalyst pushes each
+    branch's event-type filter below the watermark node, so a row
+    matching neither filter never reaches it and the watermark stalls
+    1 hour short of the data max — the last hour's outer-null rows
+    would then never release (caught by the oracle: rows short; pinned
+    by the checkpoint's frozen batchWatermarkMs during diagnosis).
+    Flush rows join the click side with user_id=-1 (no purchase carries
+    it), so they advance the watermark and can never match."""
+    wm = stream.withWatermark("ts", "1 hour")
+    clicks = wm.where(F.col("event_type").isin("click", "__flush")).select(
+        F.col("user_id").alias("c_user"),
+        F.col("event_id").alias("click_id"),
+        F.col("ts").alias("click_ts"),
+    )
+    purchases = wm.where(F.col("event_type") == "purchase").select(
+        F.col("user_id").alias("p_user"),
+        F.col("event_id").alias("purchase_id"),
+        F.col("ts").alias("purchase_ts"),
+    )
+    return purchases.join(
+        clicks,
+        (F.col("p_user") == F.col("c_user"))
+        & (F.col("click_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 1 HOUR"))
+        & (F.col("click_ts") < F.col("purchase_ts")),
+        how,
+    )
+
+
 def q_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream LEFT OUTER interval join — the semantically hard
     arm beside the inner join: a purchase with no click in its
@@ -1364,42 +1331,13 @@ def q_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded run emits the complete outer result; state for both sides
     is discarded as the interval provably passes (same bounding
     condition as the inner join)."""
-    src = _events_source(spark, sf_dir, n_flush=2, n_data=1)
-
-    def transform(stream: DataFrame) -> DataFrame:
-        # the flush rows must ride a JOIN BRANCH: Catalyst pushes each
-        # branch's event-type filter below the watermark node, so a
-        # row matching neither filter never reaches it and the
-        # watermark stalls 1 hour short of the data max — the last
-        # hour's outer-null rows would then never release (caught by
-        # the oracle: rows short; pinned by the checkpoint's frozen
-        # batchWatermarkMs during diagnosis). Flush rows join the
-        # click side with user_id=-1 (no purchase carries it), so
-        # they advance the watermark and can never match.
-        wm = stream.withWatermark("ts", "1 hour")
-        clicks = wm.where(F.col("event_type").isin("click", "__flush")).select(
-            F.col("user_id").alias("c_user"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        purchases = wm.where(F.col("event_type") == "purchase").select(
-            F.col("user_id").alias("p_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        joined = purchases.join(
-            clicks,
-            (F.col("p_user") == F.col("c_user"))
-            & (F.col("click_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 1 HOUR"))
-            & (F.col("click_ts") < F.col("purchase_ts")),
-            "leftOuter",
-        )
-        return joined.select(
-            "purchase_id", "click_id", F.col("p_user").alias("user_id")
-        )
-
-    return run_bounded_stream(
-        spark, "stream_stream_left_join", None, transform, source=src
+    joined = _interval_join_with_flush(
+        _events_source(spark, sf_dir, n_flush=2, n_data=1), "leftOuter"
+    )
+    return run_bounded(
+        spark,
+        "stream_stream_left_join",
+        joined.select("purchase_id", "click_id", F.col("p_user").alias("user_id")),
     )
 
 
@@ -1434,38 +1372,17 @@ def q_stream_stream_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     once the watermark passes flush_ts + 1h, so the post-join filter
     drops click-side flush emissions by their negative event_id — a
     stateless filter, invisible to the join's state bounds."""
-    src = _events_source(spark, sf_dir, n_flush=2, n_data=1)
-
-    def transform(stream: DataFrame) -> DataFrame:
-        wm = stream.withWatermark("ts", "1 hour")
-        clicks = wm.where(F.col("event_type").isin("click", "__flush")).select(
-            F.col("user_id").alias("c_user"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        purchases = wm.where(F.col("event_type") == "purchase").select(
-            F.col("user_id").alias("p_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        joined = purchases.join(
-            clicks,
-            (F.col("p_user") == F.col("c_user"))
-            & (F.col("click_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 1 HOUR"))
-            & (F.col("click_ts") < F.col("purchase_ts")),
-            "fullOuter",
-        )
-        return joined.where(
-            F.col("click_id").isNull() | (F.col("click_id") >= 0)
-        ).select(
-            "purchase_id",
-            "click_id",
-            F.coalesce(F.col("p_user"), F.col("c_user")).alias("user_id"),
-        )
-
-    return run_bounded_stream(
-        spark, "stream_stream_full_outer", None, transform, source=src
+    joined = _interval_join_with_flush(
+        _events_source(spark, sf_dir, n_flush=2, n_data=1), "fullOuter"
     )
+    out = joined.where(
+        F.col("click_id").isNull() | (F.col("click_id") >= 0)
+    ).select(
+        "purchase_id",
+        "click_id",
+        F.coalesce(F.col("p_user"), F.col("c_user")).alias("user_id"),
+    )
+    return run_bounded(spark, "stream_stream_full_outer", out)
 
 
 QUERIES["stream_stream_full_outer"] = q_stream_stream_full_outer
@@ -1494,27 +1411,22 @@ def q_stream_dedup_then_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketed by day."""
 
     src = _events_dup_source(spark, sf_dir, n_flush=2)
-
-    def transform(stream: DataFrame) -> DataFrame:
-        deduped = stream.withWatermark("ts", "1 day").dropDuplicates(["event_id"])
-        return (
-            deduped.groupBy(F.window("ts", "1 day").alias("w"))
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.sum(
-                    F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint")
-                ).alias("total_cents"),
-            )
-            .select(
-                F.col("w.start").alias("day_start"),
-                "n_events",
-                "total_cents",
-            )
+    deduped = src.withWatermark("ts", "1 day").dropDuplicates(["event_id"])
+    out = (
+        deduped.groupBy(F.window("ts", "1 day").alias("w"))
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum(
+                F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint")
+            ).alias("total_cents"),
         )
-
-    return run_bounded_stream(
-        spark, "stream_dedup_then_window", None, transform, source=src
+        .select(
+            F.col("w.start").alias("day_start"),
+            "n_events",
+            "total_cents",
+        )
     )
+    return run_bounded(spark, "stream_dedup_then_window", out)
 
 
 QUERIES["stream_dedup_then_window"] = q_stream_dedup_then_window
@@ -1555,22 +1467,16 @@ def q_stream_timer_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ecommerce_dataengineering_project_spark.streaming.stateful import timer_sessions_stream
 
     src = _events_source(spark, sf_dir, n_flush=2, n_data=1)
-
-    def transform(stream: DataFrame) -> DataFrame:
-        return timer_sessions_stream(stream, gap="6 hours", watermark="1 hour")
-
     # parallelism-derived like the restock arm: the per-GROUP fixed
     # cost (arrow group framing + state round-trip) dominates and
     # parallelizes across stores (measured sf0.1: 16 partitions ~35%
     # faster than the default 4 on local[32]; 8 faster than 16 by
     # 25-40% on local[8] — adaptive_state_partitions reproduces both)
-    return run_bounded_stream(
+    return run_bounded(
         spark,
         "timer_sessions",
-        None,
-        transform,
+        timer_sessions_stream(src, gap="6 hours", watermark="1 hour"),
         state_partitions=adaptive_state_partitions(spark),
-        source=src,
     ).where(F.col("user_id") >= 0)
 
 
@@ -1628,20 +1534,15 @@ def q_stream_idle_timer_flush(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ecommerce_dataengineering_project_spark.streaming.stateful import idle_flush_stream
 
     src = _events_source(spark, sf_dir, n_flush=2)
-    # noDataMicroBatches OFF: shouldRunAnotherBatch is unconditionally
-    # true under ProcessingTimeTimeout, so availableNow would schedule
-    # empty micro-batches forever. With it off, timers fire in the
-    # next DATA batch a key sits out — which is exactly the islands
-    # semantics the oracle re-derives (the flush batches give every
-    # final run its firing batch).
-    return run_bounded_stream(
+    # relies on run_bounded's noDataMicroBatches OFF: timers fire in the
+    # next DATA batch a key sits out — exactly the islands semantics
+    # the oracle re-derives (the flush batches give every final run
+    # its firing batch)
+    return run_bounded(
         spark,
         "idle_timer_flush",
-        None,
-        idle_flush_stream,
+        idle_flush_stream(src),
         state_partitions=adaptive_state_partitions(spark),
-        source=src,
-        extra_confs={"spark.sql.streaming.noDataMicroBatches.enabled": "false"},
     )
 
 
@@ -1682,7 +1583,7 @@ ORACLES["stream_idle_timer_flush"] = """
 # (1/3/5 -> batch 0/1/2) — deterministic boundaries both engines can
 # derive, so the sequential accept-loop is exactly SQL-replayable.
 STREAM_SEM_BATCHES = 3
-_SEM_BOOT_STAGED: set[str] = set()  # per-process, like _SOURCE_CACHE
+_SEM_BOOT_STAGED: set[str] = set()  # per-process, like harness._STAGED
 
 
 def q_stream_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1787,15 +1688,12 @@ def run_semantic_dedup_stream(
         semantic_cell_index,
         semantic_dedup_incremental,
     )
-    from ecommerce_dataengineering_project_spark.streaming.harness import (
-        run_bounded_foreach,
-    )
 
     base = os.path.join(TMP_ROOT, "streams", key)
     dec_dir = os.path.join(base, "decisions")
     shutil.rmtree(dec_dir, ignore_errors=True)
     # The bootstrap epoch is a pure function of the (immutable) fixture
-    # + centroids: compute it ONCE per process like staged_source does
+    # + centroids: compute it ONCE per process like staged_stream does
     # for stream inputs, then per run just copy the few files into the
     # fresh log dir — repeat serves skip the Spark job entirely.
     boot_dir = os.path.join(TMP_ROOT, "streams", "sources", f"{key}_boot")
@@ -1813,19 +1711,19 @@ def run_semantic_dedup_stream(
     os.makedirs(dec_dir, exist_ok=True)
     shutil.copytree(boot_dir, os.path.join(dec_dir, "ingest_batch=-1"))
 
-    def stage(source_dir: str):
+    def build():
         tagged = new_vectors.select("vec_id", "embedding").withColumn(
             "__batch", batch_tag
         )
-        stage_source_tagged(tagged, n_batches, source_dir)
-        return StructType(
+        schema = StructType(
             [
                 StructField("vec_id", LongType()),
                 StructField("embedding", ArrayType(FloatType())),
             ]
         )
+        return tagged, n_batches, schema, None
 
-    src = staged_source(spark, f"{key}_batches", stage)
+    src = staged_stream(spark, f"{key}_batches", build)
 
     # Explicit log schema: the per-batch index read must NOT infer its
     # schema from leaf files — inference opens parquet footers before
@@ -1869,7 +1767,7 @@ def run_semantic_dedup_stream(
             os.path.join(dec_dir, f"ingest_batch={batch_id}")
         )
 
-    run_bounded_foreach(spark, key, None, lambda s: s, apply, source=src)
+    run_bounded(spark, key, src, sink=apply)
     return spark.read.schema(log_schema).parquet(dec_dir).where(F.col("ingest_batch") >= 0).select(
         "vec_id", "cell", "n_history_hits", "n_batch_hits", "keep", "ingest_batch"
     )

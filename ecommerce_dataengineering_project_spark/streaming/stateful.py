@@ -15,7 +15,7 @@ batches, never row-at-a-time Python.
 
 Ordering contract: rows are processed in (ts, event_id) order *within*
 each micro-batch. Cross-batch order is the file/offset replay order,
-which the bounded harness pins (harness.stage_source mtimes). This is
+which the bounded harness pins (harness.staged_stream mtimes). This is
 the same contract the reference's single-threaded producer loop has.
 """
 
@@ -143,7 +143,7 @@ def inventory_restock_stream(events: DataFrame) -> DataFrame:
 
     Works on a streaming DataFrame (GroupState persists across
     micro-batches via the checkpoint) — pass through
-    ``harness.run_bounded_stream`` for deterministic bounded runs.
+    ``harness.run_bounded`` for deterministic bounded runs.
     """
     return events.groupBy("user_id").applyInPandasWithState(
         _restock_fn,

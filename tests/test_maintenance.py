@@ -251,21 +251,28 @@ def test_streaming_upsert_via_foreach_batch(spark, clean_table):
     """Streaming MERGE: micro-batches of purchase updates upserted
     into a gold table via foreachBatch + merge_upsert. Later batches
     win; re-keyed rows replace, new keys insert."""
-    from ecommerce_dataengineering_project_spark.streaming.harness import run_bounded_foreach
+    from ecommerce_dataengineering_project_spark.streaming.harness import (
+        run_bounded,
+        staged_stream,
+    )
 
     t = clean_table("t_stream_upsert")
     spark.createDataFrame(
         [("a", 1), ("b", 2)], "k string, v int"
     ).write.saveAsTable(t)
-    batches = [
-        spark.createDataFrame([("b", 20), ("c", 30)], "k string, v int"),
-        spark.createDataFrame([("c", 300), ("d", 400)], "k string, v int"),
-    ]
+    # two micro-batches, tagged by __batch
+    tagged = spark.createDataFrame(
+        [("b", 20, 0), ("c", 30, 0), ("c", 300, 1), ("d", 400, 1)],
+        "k string, v int, __batch int",
+    )
+    src = staged_stream(
+        spark, "stream_upsert_test", lambda: (tagged, 2, "k string, v int", None)
+    )
 
     def upsert(batch_df, batch_id):
         merge_upsert(spark, t, batch_df, ["k"])
 
-    run_bounded_foreach(spark, "stream_upsert_test", batches, lambda s: s, upsert)
+    run_bounded(spark, "stream_upsert_test", src, sink=upsert)
     rows = {r.k: r.v for r in spark.table(t).collect()}
     assert rows == {"a": 1, "b": 20, "c": 300, "d": 400}
     spark.sql(f"DROP TABLE {t}")

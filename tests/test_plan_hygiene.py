@@ -11,12 +11,16 @@ cross product or a row-at-a-time UDF fails here before it ships.
 Streaming queries execute their bounded run when the DataFrame is
 built, so they are swept separately: the harness records the last
 micro-batch's EXECUTED plan per run (streaming/harness.LAST_PLAN) and
-the same CartesianProduct / Python-node asserts run over those.
+the same CartesianProduct / Python-node asserts run over those. The
+same sweep pins each run's committed micro-batch count, which a plan
+cannot show (a streaming plan looks identical at any batch count).
 anomaly_isolation_forest stays excluded (driver-side fetch by design,
 S5).
 """
 
 from __future__ import annotations
+
+import os
 
 import pytest
 
@@ -109,6 +113,43 @@ _STREAM_PYTHON_OK = {
 }
 
 
+# Committed micro-batches (offsets/ log entries) of each arm's bounded
+# run: data batches plus staged flush batches, no trailing no-data
+# batch. The generator and socket arms keep their own checkpoint
+# outside the harness run dirs and are not pinned here.
+_STREAM_BATCHES = {
+    "stream_bronze_silver": 1,
+    "stream_dedup": 3,
+    "stream_dedup_rocksdb": 3,
+    "stream_dedup_then_window": 5,
+    "stream_dedup_watermarked": 3,
+    "stream_drift_monitor": 3,
+    "stream_fanout_two_tables": 3,
+    "stream_idle_timer_flush": 5,
+    "stream_inventory_restock": 2,
+    "stream_quarantine": 1,
+    "stream_scd2_dim": 3,
+    "stream_semantic_dedup": 3,
+    "stream_session_windows": 3,
+    "stream_sliding_activity": 3,
+    "stream_static_enrich": 1,
+    "stream_stream_full_outer": 3,
+    "stream_stream_join": 3,
+    "stream_stream_left_join": 3,
+    "stream_timer_sessions": 3,
+    "stream_tumbling_revenue": 3,
+    "stream_txlog_append": 3,
+    "stream_txlog_source": 1,
+    "stream_upsert_gold": 3,
+}
+
+
+def _committed_batches(ckpt: str) -> int:
+    return sum(
+        f.isdigit() for f in os.listdir(os.path.join(ckpt, "offsets"))
+    )
+
+
 @pytest.mark.parametrize(
     "name", sorted(n for n in _QUERIES if n.startswith("stream_"))
 )
@@ -118,6 +159,10 @@ def test_stream_plan_hygiene(spark, sf_dir, name):
     harness.LAST_PLAN.clear()
     _QUERIES[name](spark, sf_dir)
     assert harness.LAST_PLAN, f"{name}: no executed micro-batch plan captured"
+    ckpts = [harness._stream_dirs(run)[1] for run in harness.LAST_PLAN]
+    counts = [_committed_batches(c) for c in ckpts if os.path.isdir(c)]
+    expected = [_STREAM_BATCHES[name]] if name in _STREAM_BATCHES else []
+    assert counts == expected, f"{name}: committed micro-batches"
     for run, plan in harness.LAST_PLAN.items():
         assert "CartesianProduct" not in plan, f"{name}/{run}: cross product"
         assert (

@@ -33,7 +33,7 @@ def test_rocksdb_provider_actually_engaged(spark, sf_dir):
     """The checkpoint's offset metadata records the provider class —
     proof the run used RocksDB rather than silently falling back."""
     q_stream_dedup_rocksdb(spark, sf_dir)
-    ckpt = _stream_dirs("stream_dedup_rocksdb")[2]
+    ckpt = _stream_dirs("stream_dedup_rocksdb")[1]
     import glob
     import json
 
@@ -48,7 +48,7 @@ def test_state_time_travel_across_batches(spark, sf_dir):
     """batchId=N reads the state AS OF micro-batch N: dedup state only
     grows across the replayed batches."""
     q_statestore_inspect(spark, sf_dir)
-    ckpt = _stream_dirs("statestore_inspect")[2]
+    ckpt = _stream_dirs("statestore_inspect")[1]
     latest = spark.read.format("statestore").load(ckpt)
     n_latest = latest.count()
     early = (
@@ -62,7 +62,7 @@ def test_state_time_travel_across_batches(spark, sf_dir):
 
 def test_state_is_partition_distributed(spark, sf_dir):
     q_statestore_inspect(spark, sf_dir)
-    ckpt = _stream_dirs("statestore_inspect")[2]
+    ckpt = _stream_dirs("statestore_inspect")[1]
     st = spark.read.format("statestore").load(ckpt)
     parts = {r.partition_id for r in st.select("partition_id").distinct().collect()}
     assert len(parts) > 1  # state sharded across store instances
@@ -77,7 +77,7 @@ def test_join_state_readable_per_side(spark, sf_dir):
     )
 
     q_stream_stream_join(spark, sf_dir)
-    ckpt = _stream_dirs("stream_stream_join")[2]
+    ckpt = _stream_dirs("stream_stream_join")[1]
     left = (
         spark.read.format("statestore").option("joinSide", "left").load(ckpt)
     )
@@ -101,7 +101,7 @@ def test_window_agg_state_keys_are_windows(spark, sf_dir):
     )
 
     emitted = q_stream_dedup_then_window(spark, sf_dir)
-    ckpt = _stream_dirs("stream_dedup_then_window")[2]
+    ckpt = _stream_dirs("stream_dedup_then_window")[1]
     agg_state = (
         spark.read.format("statestore").option("operatorId", 0).load(ckpt)
     )

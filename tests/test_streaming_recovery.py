@@ -174,3 +174,18 @@ def test_adaptive_state_partitions_tracks_parallelism(spark):
     got = adaptive_state_partitions(spark)
     assert got == min(16, max(4, par))
     assert adaptive_state_partitions(spark, cap=8) == min(8, max(4, par))
+
+
+def test_generator_ingest_fails_loudly_when_drains_run_out(spark, sf_dir, monkeypatch):
+    """The restart-resume drain of stream_generator_ingest needs two
+    productive drains (3000 rows at 1500 per prefetch). With the drain
+    bound cut to one, the loop runs out before the sink holds every row
+    and must raise, naming the run and rows committed vs expected,
+    instead of returning a partial sink."""
+    import pytest
+
+    from ecommerce_dataengineering_project_spark.queries import streaming_queries as sq
+
+    monkeypatch.setattr(sq, "GEN_STREAM_DRAINS", 1)
+    with pytest.raises(RuntimeError, match=r"stream_generator_ingest: 1 drains committed \d+ of 3000 rows"):
+        sq.q_stream_generator_ingest(spark, sf_dir)

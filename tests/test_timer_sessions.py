@@ -8,8 +8,11 @@ and cooperate with the inline gap-split on one state shape.
 from __future__ import annotations
 
 import datetime as dt
+import functools
 
 import pytest
+from pyspark.errors import StreamingQueryException
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
@@ -20,8 +23,12 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ecommerce_dataengineering_project_spark.streaming.harness import run_bounded_stream
+from ecommerce_dataengineering_project_spark.streaming.harness import (
+    run_bounded,
+    staged_stream,
+)
 from ecommerce_dataengineering_project_spark.streaming.stateful import (
+    idle_flush_stream,
     timer_sessions_stream,
 )
 
@@ -46,6 +53,22 @@ def _rows(spark, rows):
     )
 
 
+def _staged(spark, key, batches):
+    """``batches`` (DataFrames of one schema) staged as one micro-batch
+    each, in list order."""
+    tagged = functools.reduce(
+        DataFrame.unionByName,
+        [b.withColumn("__batch", F.lit(i)) for i, b in enumerate(batches)],
+    )
+    return staged_stream(
+        spark, key, lambda: (tagged, len(batches), batches[0].schema, None)
+    )
+
+
+def _sessions(stream):
+    return timer_sessions_stream(stream, gap="6 hours", watermark="1 hour")
+
+
 @pytest.fixture(scope="module")
 def sessions(spark):
     batches = [
@@ -67,12 +90,8 @@ def sessions(spark):
         _rows(spark, [(-1, _FLUSH, -1, 0.0)]),
         _rows(spark, [(-2, _FLUSH + dt.timedelta(days=1), -1, 0.0)]),
     ]
-    out = run_bounded_stream(
-        spark,
-        "timer_sessions_unit",
-        batches,
-        lambda s: timer_sessions_stream(s, gap="6 hours", watermark="1 hour"),
-    )
+    src = _staged(spark, "timer_sessions_unit", batches)
+    out = run_bounded(spark, "timer_sessions_unit", _sessions(src))
     return sorted(map(tuple, out.collect()))
 
 
@@ -159,12 +178,9 @@ def test_random_batch_splits_match_the_model(spark):
             _rows(spark, [(-1, _FLUSH, -1, 0.0)]),
             _rows(spark, [(-2, _FLUSH + dt.timedelta(days=1), -1, 0.0)]),
         ]
-        out = run_bounded_stream(
-            spark,
-            f"timer_sessions_prop_{seed}",
-            batches,
-            lambda s: timer_sessions_stream(s, gap="6 hours", watermark="1 hour"),
-        ).where(F.col("user_id") >= 0)
+        name = f"timer_sessions_prop_{seed}"
+        src = _staged(spark, name, batches)
+        out = run_bounded(spark, name, _sessions(src)).where(F.col("user_id") >= 0)
         epoch = dt.datetime(1970, 1, 1)
         got = sorted(
             (
@@ -212,7 +228,6 @@ def test_gap_grammar_matches_watermark_grammar():
 # ---- T7 proc-time timer twin: idle-key TTL flush ---------------------
 
 _IDLE_SCHEMA = "event_id LONG, ts TIMESTAMP, user_id LONG, value DOUBLE"
-_IDLE_CONFS = {"spark.sql.streaming.noDataMicroBatches.enabled": "false"}
 
 
 def _idle_batch(spark, rows):
@@ -223,13 +238,7 @@ def _idle_batch(spark, rows):
 
 
 def _run_idle(spark, name, batches):
-    from ecommerce_dataengineering_project_spark.streaming.harness import run_bounded_stream
-    from ecommerce_dataengineering_project_spark.streaming.stateful import idle_flush_stream
-
-    out = run_bounded_stream(
-        spark, name, batches, idle_flush_stream,
-        state_partitions=4, extra_confs=_IDLE_CONFS,
-    )
+    out = run_bounded(spark, name, idle_flush_stream(_staged(spark, name, batches)))
     return sorted(map(tuple, out.collect()))
 
 
@@ -277,11 +286,33 @@ def test_idle_flush_null_value_counts_zero_cents(spark):
     assert got == [(10, dt.datetime(2024, 1, 1, 1), dt.datetime(2024, 1, 1, 2), 2, 250)]
 
 
-def test_idle_flush_restores_no_data_batch_conf(spark):
-    """The per-run conf override must not leak into the session (a
-    leaked 'false' would silently change every later watermark-driven
-    stream in the process)."""
-    before = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    _run_idle(spark, "idle_flush_conf", [_idle_batch(spark, [(1, 10, 1.0)])])
-    after = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    assert after == before
+# run_bounded's scoped confs: its two defaults plus one caller conf
+_CALLER_CONFS = {"spark.sql.streaming.minBatchesToRetain": "7"}
+_SCOPED = (
+    "spark.sql.shuffle.partitions",
+    "spark.sql.streaming.noDataMicroBatches.enabled",
+    *_CALLER_CONFS,
+)
+
+
+def _boom(batch_df, batch_id):
+    raise ValueError("sink failed on purpose")
+
+
+@pytest.mark.parametrize("sink", ["parquet", "foreach_batch", "raising_sink"])
+def test_idle_flush_restores_no_data_batch_conf(spark, sink):
+    """The per-run conf scope must not leak into the session (a leaked
+    'false' would silently change every later watermark-driven stream
+    in the process) — for both sink kinds, and when the sink raises,
+    whose error must still reach the caller."""
+    before = {k: spark.conf.get(k, None) for k in _SCOPED}
+    name = f"idle_flush_conf_{sink}"
+    src = idle_flush_stream(_staged(spark, name, [_idle_batch(spark, [(1, 10, 1.0)])]))
+    if sink == "parquet":
+        run_bounded(spark, name, src, confs=_CALLER_CONFS).collect()
+    elif sink == "foreach_batch":
+        run_bounded(spark, name, src, sink=lambda df, i: df.count(), confs=_CALLER_CONFS)
+    else:
+        with pytest.raises(StreamingQueryException, match="sink failed on purpose"):
+            run_bounded(spark, name, src, sink=_boom, confs=_CALLER_CONFS)
+    assert {k: spark.conf.get(k, None) for k in _SCOPED} == before
