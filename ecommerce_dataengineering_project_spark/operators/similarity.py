@@ -1075,9 +1075,9 @@ def _reapply_centroids(
             .drop("cell")
             .withColumnRenamed("new_cell", "cell")
             # truncate lineage so the overwrite no longer reads from
-            # its own target (same stage-then-overwrite commit as
-            # maintenance.merge_upsert_path); materialized state is
-            # bounded by the affected cells' rows, not the index
+            # its own target (as maintenance.merge_upsert does);
+            # materialized state is bounded by the affected cells'
+            # rows, not the index
             .localCheckpoint(eager=True)
         )
         present = {r["cell"] for r in staged.select("cell").distinct().collect()}

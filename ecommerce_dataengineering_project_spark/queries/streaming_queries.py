@@ -354,26 +354,26 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_upsert_gold(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K3/K4 as a live streaming MERGE: each micro-batch reduces to
     its latest event per user (deterministic ts/event_id order) and
-    upserts into a path-backed gold table via foreachBatch — the
+    upserts into a gold transaction-log table via foreachBatch — the
     reference's Kafka->Delta MERGE pattern (streaming_consumer.py:
-    81-88) on the parquet stand-in. Because the staged batches are
-    event-time ranges, later batches carry later timestamps and the
-    final table is exactly "each user's last event" — which makes the
-    whole streaming upsert loop batch-oracle-checkable."""
+    81-88) on the parquet stand-in. Each batch commits one snapshot
+    (current rows minus the batch's keys, plus the batch) with the
+    ``(run, batch_id)`` SetTransaction pair, so readers only see
+    committed versions and a replayed batch is skipped. Because the
+    staged batches are event-time ranges, later batches carry later
+    timestamps and the final table is exactly "each user's last
+    event" — which makes the whole streaming upsert loop
+    batch-oracle-checkable."""
     import os
-    import shutil
 
     from ecommerce_dataengineering_project_spark.operators.aggregates import (
         dedup_keep_first,
     )
-    from ecommerce_dataengineering_project_spark.sources.maintenance import (
-        merge_upsert_path,
-    )
+    from ecommerce_dataengineering_project_spark.sources.txlog import recreate
 
     src = _events_source(spark, sf_dir, n_flush=0)
     name = f"upsert_gold_{_sf_key(sf_dir)}"
-    gold_dir = os.path.join(TMP_ROOT, "streams", name, "gold")
-    shutil.rmtree(gold_dir, ignore_errors=True)
+    table = recreate(os.path.join(TMP_ROOT, "streams", name, "gold"))
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         latest = dedup_keep_first(
@@ -387,10 +387,14 @@ def q_stream_upsert_gold(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("event_type").alias("last_type"),
             F.col("value").alias("last_value"),
         )
-        merge_upsert_path(spark, gold_dir, latest, ["user_id"])
+        if table.versions():
+            current = table.read(spark)
+            kept = current.join(latest.select("user_id"), "user_id", "left_anti")
+            latest = kept.unionByName(latest).select(*current.columns)
+        table.overwrite(latest, txn=(name, batch_id))
 
     run_bounded(spark, name, src, sink=upsert)
-    return spark.read.parquet(gold_dir)
+    return table.read(spark)
 
 
 def q_stream_scd2_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -398,18 +402,21 @@ def q_stream_scd2_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     tracked-attribute change events (first order of each customer-day,
     as in the batch `scd2_customer_dim`) replay as three event-time-
     ordered micro-batches, each applied with operators/scd.py
-    scd2_apply via foreachBatch onto a path-backed dim table.
+    scd2_apply via foreachBatch and committed as one transaction-log
+    snapshot of the dim table.
 
     Incremental-apply == one-shot-apply by induction: change
     suppression only looks backward and every later batch carries
     strictly later event dates, so the final table equals the batch
-    SCD2 build — which is exactly what the oracle checks. This is the
-    Delta-style `MERGE`-maintained dimension loop on the parquet
-    stand-in."""
+    SCD2 build — which is exactly what the oracle checks. scd2_apply
+    is not idempotent, so each commit carries the ``(run, batch_id)``
+    SetTransaction pair and a replayed batch is skipped rather than
+    duplicating history rows. This is the Delta-style
+    `MERGE`-maintained dimension loop on the parquet stand-in."""
     import os
-    import shutil
 
     from ecommerce_dataengineering_project_spark.operators.scd import scd2_apply
+    from ecommerce_dataengineering_project_spark.sources.txlog import recreate
     from pyspark.sql import Window
     from pyspark.sql.types import (
         DateType,
@@ -418,8 +425,7 @@ def q_stream_scd2_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     name = f"scd2_dim_{_sf_key(sf_dir)}"
-    dim_dir = os.path.join(TMP_ROOT, "streams", name, "dim")
-    shutil.rmtree(dim_dir, ignore_errors=True)
+    table = recreate(os.path.join(TMP_ROOT, "streams", name, "dim"))
 
     def build():
         orders = load_table(spark, sf_dir, "orders")
@@ -454,8 +460,8 @@ def q_stream_scd2_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = staged_stream(spark, f"scd2_upd_{_sf_key(sf_dir)}", build)
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if os.path.isdir(dim_dir):
-            dim = spark.read.parquet(dim_dir)
+        if table.versions():
+            dim = table.read(spark)
         else:
             cust = load_table(spark, sf_dir, "customer")
             dim = cust.select(
@@ -465,24 +471,13 @@ def q_stream_scd2_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(None).cast("date").alias("effective_to"),
                 F.lit(True).alias("is_current"),
             )
-        # stage-then-swap (r16, same commit as merge_upsert_path): the
-        # new dim version is computed READING the current dim_dir and
-        # written to a sibling dir, then renamed over it — one job per
-        # batch where the eager checkpoint + overwrite paid two.
         new_state = scd2_apply(
             dim, batch_df, key_cols=["c_custkey"], attr_cols=["segment"]
         )
-        stage = dim_dir + ".stage"
-        new_state.write.mode("overwrite").parquet(stage)
-        old = dim_dir + ".old"
-        shutil.rmtree(old, ignore_errors=True)
-        if os.path.isdir(dim_dir):
-            os.rename(dim_dir, old)
-        os.rename(stage, dim_dir)
-        shutil.rmtree(old, ignore_errors=True)
+        table.overwrite(new_state, txn=(name, batch_id))
 
     run_bounded(spark, name, src, sink=apply_batch)
-    return spark.read.parquet(dim_dir)
+    return table.read(spark)
 
 
 def q_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -922,10 +917,10 @@ ORACLES["stream_scd2_dim"] = _COMMERCE_ORACLES["scd2_customer_dim"]
 def q_stream_txlog_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K3/K4 with a REAL atomic commit per micro-batch: each batch of
     the bounded event replay appends to the parquet transaction log
-    (sources/txlog.py) — manifest-rename publication closes the
-    non-atomicity window `merge_upsert_path` documents, giving the
-    exactly-Delta-shaped streaming loop (data files first, atomic log
-    entry second, readers only ever see committed snapshots). The
+    (sources/txlog.py) — the same data-files-first, hard-link-publish
+    commit the streaming MERGE sinks use, giving the exactly-Delta-
+    shaped streaming loop (readers only ever see committed snapshots,
+    a replayed batch is skipped by its SetTransaction pair). The
     final snapshot is the whole replayed stream, which the oracle
     checks against the source table; version count == batch count is
     pinned in tests/test_txlog.py's streaming twin below the query

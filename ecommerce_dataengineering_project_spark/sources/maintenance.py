@@ -5,19 +5,24 @@ semantics and schema evolution (delta_to_iceberg.py:44-52, README.md:41),
 Delta's transactional appends. On plain parquet managed tables the
 engine provides the same semantics as explicit operators:
 
-- ``merge_upsert``: MERGE INTO by key (update-else-insert), the
-  row-level operation Iceberg v2 advertises. On an unpartitioned
-  table it is anti-join + union + atomic overwrite. With
-  ``partition_col`` it is partition-scoped: only partitions that the
-  updates touch are scanned (partition pruning on the target read)
-  and rewritten (dynamic partition overwrite) — at 100 TB a merge
-  touching 3 of 10 000 date partitions reads and writes 3.
+- ``merge_upsert``: MERGE INTO a catalog table by key (update-else-
+  insert), the row-level operation Iceberg v2 advertises. On an
+  unpartitioned table it is anti-join + union + an overwrite in
+  place. With ``partition_col`` it is partition-scoped: only
+  partitions that the updates touch are scanned (partition pruning on
+  the target read) and rewritten (dynamic partition overwrite) — at
+  100 TB a merge touching 3 of 10 000 date partitions reads and
+  writes 3.
 - ``evolve_append``: append with schema evolution (new columns null-
   filled on old rows at read; missing columns null-filled on append).
-- ``compact``: small-file compaction to a target file count — the
-  maintenance job every streaming-append table needs (each micro-batch
-  writes >=1 file per partition; scan cost grows with file count, not
-  bytes).
+- ``compact`` / ``compact_partitioned``: small-file compaction to a
+  target file count — the maintenance job every streaming-append
+  table needs (each micro-batch writes >=1 file per partition; scan
+  cost grows with file count, not bytes).
+
+None of these is a crash-atomic commit. Path-backed tables that need
+one — the streaming MERGE sinks among them — commit snapshots through
+``sources/txlog.TxTable``.
 """
 
 from __future__ import annotations
@@ -60,9 +65,9 @@ def merge_upsert(
         # front; keep the recreated table's column order stable.
         merged = kept.unionByName(updates).select(*target.columns)
         # localCheckpoint truncates lineage so the overwrite no longer
-        # "reads from" the target (cache alone keeps the plan reference);
-        # this is the stage-then-swap commit the reference delegates to
-        # Iceberg's snapshot mechanism.
+        # "reads from" the target (cache alone keeps the plan reference).
+        # The saveAsTable overwrite then replaces the table IN PLACE: not
+        # crash-atomic. Path-backed sinks commit through TxTable instead.
         staged = merged.localCheckpoint(eager=True)
         staged.write.mode("overwrite").saveAsTable(table)
         return spark.table(table)
@@ -125,53 +130,6 @@ def merge_upsert(
         )
     spark.catalog.refreshTable(table)
     return spark.table(table)
-
-
-def merge_upsert_path(
-    spark: SparkSession,
-    path: str,
-    updates: DataFrame,
-    key_cols: list[str],
-) -> DataFrame:
-    """MERGE INTO a path-backed parquet table — no catalog involved,
-    so it works in a vanilla session with no warehouse configured
-    (the grading driver's shape, and the general foreachBatch-sink
-    case on a bare cluster). First call creates the table from
-    ``updates``; later calls replace matched keys and insert the rest,
-    exactly like :func:`merge_upsert`'s unpartitioned branch.
-
-    Stage-then-swap commit (r16): the merged relation is written to a
-    sibling ``.stage`` directory — reading the CURRENT table while
-    writing elsewhere, so no lineage truncation is needed — and then
-    renamed over the target. One job per merge where the previous form
-    paid two (an eager localCheckpoint to cut the read-from-target
-    lineage, then an overwrite that re-read the checkpoint blocks);
-    the directory rename is also a narrower non-atomicity window than
-    overwrite-in-place. Real Delta (the reference's sink,
-    streaming_consumer.py:81-88) closes that window with a transaction
-    log; parquet stand-ins can't. Existence is probed with a
-    driver-side ``os.path`` check, which pins this helper to local/NFS
-    paths; an object-store port swaps the probe and the rename for a
-    catalog or _SUCCESS-marker commit.
-    """
-    import os
-    import shutil
-
-    if not os.path.isdir(path):
-        updates.write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path)
-    target = spark.read.parquet(path)
-    updates = updates.select(*target.columns)
-    kept = target.join(updates.select(*key_cols), on=key_cols, how="left_anti")
-    merged = kept.unionByName(updates).select(*target.columns)
-    stage = path.rstrip("/") + ".stage"
-    merged.write.mode("overwrite").parquet(stage)
-    old = path.rstrip("/") + ".old"
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(path, old)
-    os.rename(stage, path)
-    shutil.rmtree(old, ignore_errors=True)
-    return spark.read.parquet(path)
 
 
 def _partition_predicate(partition_col: str, values: set):

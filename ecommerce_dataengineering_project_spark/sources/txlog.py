@@ -28,6 +28,7 @@ and pushdown behave identically to a plain scan.
 
 from __future__ import annotations
 
+import contextlib
 import datetime as _dt
 import json
 import os
@@ -199,53 +200,55 @@ class TxTable:
         tmp = os.path.join(
             log, f".v{version}.{os.getpid()}.{uuid.uuid4().hex[:8]}.json.tmp"
         )
-        with open(tmp, "w") as fh:
-            json.dump(
-                {
-                    "version": version,
-                    "action": action,
-                    "files": sorted(files),
-                    # per-file column min/max (Delta add-action /
-                    # Iceberg manifest stats): lets scan() prune files
-                    # from the log alone
-                    "stats": stats or {},
-                    # Delta SetTransaction twin: per-writer-app highest
-                    # committed transaction version, the watermark
-                    # idempotent streaming appends dedup against
-                    "txn": txn or {},
-                    # Delta metaData twin: the table's recorded schema
-                    # ([name, simpleString] pairs) — what writer-side
-                    # enforcement validates new commits against
-                    "schema": schema or [],
-                    # per-file Bloom filter index (Delta/Iceberg bloom
-                    # column index twin): point-lookup pruning on
-                    # high-cardinality columns where min/max ranges
-                    # cannot help — see candidate_files_point
-                    "bloom": bloom or {},
-                    # Delta CHECK-constraint twin ({name: sql_expr}):
-                    # every writer path validates its NEW rows against
-                    # these before publish — see _validate_constraints
-                    "constraints": constraints or {},
-                    # DELETION VECTORS (Delta DV twin): per-file sorted
-                    # row positions deleted WITHOUT rewriting the file —
-                    # every read path filters them out positionally via
-                    # _metadata.row_index (see _read_files)
-                    "dv": dv or {},
-                    # COLUMN MAPPING (Delta columnMapping twin): rename/
-                    # drop columns as metadata-only commits, zero files
-                    # rewritten. ``colmap`` maps the PHYSICAL name in
-                    # the parquet files to the current LOGICAL name
-                    # (non-identity entries only); ``dropped`` lists
-                    # physical names reads must hide. Data-coupled like
-                    # dv/stats: every commit must carry them forward
-                    # (tests sweep this), rollback restores the old
-                    # snapshot's, compact() purges by physical rewrite.
-                    "colmap": colmap or {},
-                    "dropped": dropped or [],
-                },
-                fh,
-            )
+        # the finally also removes a temp manifest whose write failed
+        # part-way, so no torn .json.tmp outlives a failed commit
         try:
+            with open(tmp, "w") as fh:
+                json.dump(
+                    {
+                        "version": version,
+                        "action": action,
+                        "files": sorted(files),
+                        # per-file column min/max (Delta add-action /
+                        # Iceberg manifest stats): lets scan() prune files
+                        # from the log alone
+                        "stats": stats or {},
+                        # Delta SetTransaction twin: per-writer-app highest
+                        # committed transaction version, the watermark
+                        # idempotent streaming appends dedup against
+                        "txn": txn or {},
+                        # Delta metaData twin: the table's recorded schema
+                        # ([name, simpleString] pairs) — what writer-side
+                        # enforcement validates new commits against
+                        "schema": schema or [],
+                        # per-file Bloom filter index (Delta/Iceberg bloom
+                        # column index twin): point-lookup pruning on
+                        # high-cardinality columns where min/max ranges
+                        # cannot help — see candidate_files_point
+                        "bloom": bloom or {},
+                        # Delta CHECK-constraint twin ({name: sql_expr}):
+                        # every writer path validates its NEW rows against
+                        # these before publish — see _validate_constraints
+                        "constraints": constraints or {},
+                        # DELETION VECTORS (Delta DV twin): per-file sorted
+                        # row positions deleted WITHOUT rewriting the file —
+                        # every read path filters them out positionally via
+                        # _metadata.row_index (see _read_files)
+                        "dv": dv or {},
+                        # COLUMN MAPPING (Delta columnMapping twin): rename/
+                        # drop columns as metadata-only commits, zero files
+                        # rewritten. ``colmap`` maps the PHYSICAL name in
+                        # the parquet files to the current LOGICAL name
+                        # (non-identity entries only); ``dropped`` lists
+                        # physical names reads must hide. Data-coupled like
+                        # dv/stats: every commit must carry them forward
+                        # (tests sweep this), rollback restores the old
+                        # snapshot's, compact() purges by physical rewrite.
+                        "colmap": colmap or {},
+                        "dropped": dropped or [],
+                    },
+                    fh,
+                )
             os.link(tmp, final)
         except FileExistsError:
             raise ConcurrentCommitError(
@@ -253,7 +256,8 @@ class TxTable:
                 "re-read the latest snapshot and retry"
             ) from None
         finally:
-            os.unlink(tmp)
+            with contextlib.suppress(FileNotFoundError):
+                os.unlink(tmp)
         return version
 
     # ----------------------------------------------------- constraints
@@ -779,13 +783,32 @@ class TxTable:
             "append: lost the version CAS 8 times in a row"
         )
 
-    def overwrite(self, df: DataFrame) -> int:
+    @staticmethod
+    def _txn_committed(man: dict, txn: tuple[str, int] | None) -> bool:
+        """True when the snapshot's SetTransaction watermark for app
+        ``txn[0]`` already covers transaction version ``txn[1]`` — the
+        replay-skip rule every idempotent writer shares."""
+        return txn is not None and man.get("txn", {}).get(txn[0], -1) >= txn[1]
+
+    def overwrite(self, df: DataFrame, txn: tuple[str, int] | None = None) -> int:
         """Overwrite REDEFINES the table, schema included (Delta's
         overwriteSchema path) — no compatibility check against the
-        prior snapshot's columns."""
+        prior snapshot's columns.
+
+        ``txn=(app_id, txn_version)`` makes the commit idempotent like
+        :meth:`append_txn`: a replay whose version the watermark already
+        covers returns the current version before any data is written;
+        otherwise the pair joins the published watermark. An overwrite
+        does not commute, so a lost CAS raises ConcurrentCommitError
+        instead of rebasing."""
         vs = self.versions()
         version = (vs[-1] + 1) if vs else 1
         prev_man = self._manifest(vs[-1]) if vs else {}
+        if self._txn_committed(prev_man, txn):
+            return vs[-1]  # this batch already committed: no-op
+        txns = prev_man.get("txn", {})
+        if txn is not None:
+            txns = {**txns, txn[0]: txn[1]}
         cons = prev_man.get("constraints", {})
         self._validate_constraints(df, cons)
         # schema redefinition: the df's names BECOME the physical
@@ -793,7 +816,7 @@ class TxTable:
         new_files, new_stats = self._write_commit_data(df, version, man={})
         return self._publish(
             version, new_files, "overwrite", new_stats,
-            prev_man.get("txn", {}),
+            txns,
             self._df_schema(df),
             constraints=cons,
         )
@@ -815,8 +838,7 @@ class TxTable:
         for _ in range(8):
             vs = self.versions()
             man = self._manifest(vs[-1]) if vs else {}
-            txns = man.get("txn", {})
-            if txns.get(app_id, -1) >= txn_version:
+            if self._txn_committed(man, (app_id, txn_version)):
                 return vs[-1]  # this batch already committed: no-op
             version = (vs[-1] + 1) if vs else 1
             schema = self._check_schema(
@@ -843,7 +865,7 @@ class TxTable:
                     man.get("files", []) + files,
                     f"append-txn:{app_id}:{txn_version}",
                     {**man.get("stats", {}), **stats},
-                    {**txns, app_id: txn_version},
+                    {**man.get("txn", {}), app_id: txn_version},
                     schema,
                     bloom=man.get("bloom", {}),
                     constraints=cons,

@@ -326,23 +326,6 @@ def test_compact_partitioned_swap_safety(spark, tmp_path):
         compact_partitioned(spark, path, target_files=1)
 
 
-def test_merge_upsert_path(spark, tmp_path):
-    """Path-backed MERGE (no catalog): create on first call, then
-    replace matched keys / insert new ones — the foreachBatch gold
-    sink for vanilla sessions."""
-    from ecommerce_dataengineering_project_spark.sources.maintenance import merge_upsert_path
-
-    p = str(tmp_path / "gold")
-    merge_upsert_path(
-        spark, p, spark.createDataFrame([("a", 1), ("b", 2)], "k string, v int"), ["k"]
-    )
-    merge_upsert_path(
-        spark, p, spark.createDataFrame([("b", 20), ("c", 30)], "k string, v int"), ["k"]
-    )
-    rows = {r.k: r.v for r in spark.read.parquet(p).collect()}
-    assert rows == {"a": 1, "b": 20, "c": 30}
-
-
 def test_evolve_append_refuses_type_conflicts(spark):
     """A batch column whose type conflicts with the table's must raise
     (the silent cast() null-out path is data corruption)."""

@@ -184,24 +184,40 @@ def test_schema_evolution_merge_read(spark, table):
     assert rows[0] is None and rows[7] == 70
 
 
-def test_append_txn_skips_replayed_batch(spark, table):
+@pytest.mark.parametrize("writer", ["append_txn", "overwrite"])
+def test_append_txn_skips_replayed_batch(spark, table, writer):
     """Delta SetTransaction semantics: foreachBatch is at-least-once,
-    so a retried micro-batch re-runs its commit — append_txn must
-    no-op the replay instead of double-appending."""
-    v1 = table.append_txn(_df(spark, 0, 10), "appA", 0)
+    so a retried micro-batch re-runs its commit — append_txn and
+    overwrite(txn=...) must no-op the replay, before writing any data,
+    instead of committing it again."""
+
+    def commit(df, app_id, batch_id):
+        if writer == "append_txn":
+            return table.append_txn(df, app_id, batch_id)
+        return table.overwrite(df, txn=(app_id, batch_id))
+
+    def data_dirs():
+        return len(os.listdir(os.path.join(table.root, "data")))
+
+    # visible rows after each commit: appends accumulate, overwrites replace
+    n1, n2, n3 = (10, 15, 17) if writer == "append_txn" else (10, 5, 2)
+    v1 = commit(_df(spark, 0, 10), "appA", 0)
     assert v1 == 1
     # retry of batch 0: skipped, version unchanged, rows not duplicated
-    assert table.append_txn(_df(spark, 0, 10), "appA", 0) == 1
-    assert table.read(spark).count() == 10
+    assert commit(_df(spark, 0, 10), "appA", 0) == 1
+    assert table.read(spark).count() == n1
+    assert data_dirs() == 1
     # next batch commits normally
-    assert table.append_txn(_df(spark, 10, 15), "appA", 1) == 2
-    assert table.read(spark).count() == 15
+    assert commit(_df(spark, 10, 15), "appA", 1) == 2
+    assert table.read(spark).count() == n2
     # a DIFFERENT app's batch 0 is not confused with appA's
-    assert table.append_txn(_df(spark, 100, 102), "appB", 0) == 3
-    assert table.read(spark).count() == 17
+    assert commit(_df(spark, 100, 102), "appB", 0) == 3
+    assert table.read(spark).count() == n3
     # stale replay of an OLD batch after newer commits: still skipped
-    assert table.append_txn(_df(spark, 0, 10), "appA", 0) == 3
-    assert table.read(spark).count() == 17
+    assert commit(_df(spark, 0, 10), "appA", 0) == 3
+    assert table.read(spark).count() == n3
+    assert data_dirs() == 3
+    assert table._manifest(3)["txn"] == {"appA": 1, "appB": 0}
 
 
 def test_txn_watermark_survives_rollback(spark, table):
@@ -216,6 +232,98 @@ def test_txn_watermark_survives_rollback(spark, table):
     v = table.append_txn(_df(spark, 10, 20), "app", 1)
     assert table.read(spark).count() == 10
     assert v == 3
+
+
+def _fail_data_write(m):
+    """Data files land on disk, then the commit dies before publish."""
+    real = TxTable._write_commit_data
+
+    def write_then_die(self, *a, **kw):
+        real(self, *a, **kw)
+        raise OSError("killed after the data write")
+
+    m.setattr(TxTable, "_write_commit_data", write_then_die)
+
+
+def _fail_manifest_write(m):
+    """The temp manifest is left half-written."""
+    import types
+
+    from ecommerce_dataengineering_project_spark.sources import txlog
+
+    def torn_dump(obj, fh):
+        fh.write('{"version": ')
+        raise OSError("killed mid-manifest")
+
+    m.setattr(txlog, "json", types.SimpleNamespace(load=json.load, dump=torn_dump))
+
+
+def _fail_publish(m):
+    def no_link(src, dst):
+        raise OSError("killed at the publish link")
+
+    m.setattr(os, "link", no_link)
+
+
+@pytest.mark.parametrize(
+    "kill", [_fail_data_write, _fail_manifest_write, _fail_publish],
+    ids=["data", "manifest", "publish"],
+)
+def test_overwrite_txn_survives_a_kill_at_each_commit_step(
+    spark, table, monkeypatch, kill
+):
+    """A commit that dies at any step leaves the previous snapshot as
+    the only visible state and no temp manifest in the log; retrying
+    the same (app, batch) then commits exactly once."""
+    table.overwrite(_df(spark, 0, 10), txn=("app", 0))
+    log = os.path.join(table.root, "_txlog")
+    with monkeypatch.context() as m:
+        kill(m)
+        with pytest.raises(OSError, match="killed"):
+            table.overwrite(_df(spark, 100, 105), txn=("app", 1))
+    assert table.versions() == [1]
+    assert sorted(r.id for r in table.read(spark).collect()) == list(range(10))
+    assert not [f for f in os.listdir(log) if f.endswith(".json.tmp")]
+    # the restarted batch commits once; a second replay is skipped
+    assert table.overwrite(_df(spark, 100, 105), txn=("app", 1)) == 2
+    assert table.overwrite(_df(spark, 100, 105), txn=("app", 1)) == 2
+    assert table.versions() == [1, 2]
+    assert sorted(r.id for r in table.read(spark).collect()) == list(range(100, 105))
+
+
+def test_scd2_replay_commits_history_once(spark, table):
+    """scd2_apply is not idempotent: re-applying a batch to its own
+    output closes the replayed versions a second time. Committing each
+    batch with overwrite(txn=...) — the stream_scd2_dim sink — turns a
+    foreachBatch replay into a no-op, so history stays one row per
+    (key, effective_from)."""
+    import datetime as dt
+
+    from ecommerce_dataengineering_project_spark.operators.scd import scd2_apply
+
+    table.overwrite(
+        spark.sql(
+            "SELECT 1L AS c_custkey, 'A' AS segment, "
+            "DATE'1990-01-01' AS effective_from, "
+            "CAST(NULL AS DATE) AS effective_to, true AS is_current"
+        )
+    )
+    updates = spark.createDataFrame(
+        [(1, "B", dt.date(1995, 1, 1)), (1, "C", dt.date(1996, 1, 1))],
+        "c_custkey long, segment string, effective_from date",
+    )
+
+    def apply_batch(batch_id):
+        dim = table.read(spark)
+        new_state = scd2_apply(dim, updates, ["c_custkey"], ["segment"])
+        table.overwrite(new_state, txn=("scd2", batch_id))
+
+    apply_batch(0)
+    apply_batch(0)  # replay: the batch ran, its offset commit did not
+    rows = table.read(spark).collect()
+    keys = [(r.c_custkey, r.effective_from) for r in rows]
+    assert len(keys) == len(set(keys)) == 3
+    assert sorted(r.segment for r in rows) == ["A", "B", "C"]
 
 
 def test_stats_poisoned_by_undecodable_group(tmp_path):
